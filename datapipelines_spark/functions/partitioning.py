@@ -80,6 +80,16 @@ def parallelize_small(df: DataFrame, min_partitions: int | None = None) -> DataF
     ~800k splits from ``spark.sql.files.maxPartitionBytes`` and must never
     be squeezed to ``defaultParallelism``. Correct-at-scale beats saving
     one planning pass.
+
+    Widening a TINY input has a price of its own: every unit of work has
+    a fixed cost that does not depend on its rows. Measured on a 4-vCPU
+    VM (local[4], CPython 3.11, Spark 4.1): about 0.22 CPU-s per Python
+    task — 0.21 s of it pyspark's per-task ``importlib.invalidate_caches()``
+    re-reading ``pyspark.zip`` — and about 0.15-0.2 JVM CPU-s per tiny
+    job. Round-robining a few hundred rows into ``defaultParallelism``
+    Arrow tasks therefore multiplies that fixed cost without buying any
+    parallelism; per-tick operators on micro-batches
+    (``operators/dedup.py:ingest_tick_verdicts``) skip this helper.
     """
     if df.isStreaming:
         # a streaming plan has no .rdd to probe and its micro-batch

@@ -217,7 +217,7 @@ def _doc_sig_udf(config: MinHashConfig):
     def ds(texts: pd.Series) -> pd.DataFrame:
         shingles, sigs = [], []
         for t in texts:
-            sh = _shingle_list_py(t, n)
+            sh = _shingle_list_py(t, n) if t is not None else []
             shingles.append(sh)
             if not sh:
                 sigs.append(np.empty(0, dtype=np.int64))
@@ -1001,22 +1001,6 @@ def minhash_lsh_join(
     rdocs = managed_persist(
         _docs_with_signatures(right, text_col, id_col, config, impl)
     )
-    return _lsh_join_from_docs(ldocs, rdocs, id_col, config, threshold)
-
-
-def _lsh_join_from_docs(
-    ldocs: DataFrame,
-    rdocs: DataFrame,
-    id_col: str,
-    config: MinHashConfig,
-    threshold: float,
-) -> DataFrame:
-    """``minhash_lsh_join`` over PRECOMPUTED signature tables (the output
-    of ``_docs_with_signatures``, persisted by the caller). Split out so
-    composed operators that probe one batch against several standing sides
-    (incremental/tick verdicts) pay ONE signature pass per side instead of
-    one per probe — each signature stage is a full Arrow shingle+minhash
-    pass over its corpus, the dominant cost of every LSH pipeline here."""
     lb = lsh_band_keys(ldocs, id_col, config).withColumnRenamed(id_col, "doc_a")
     rb = lsh_band_keys(rdocs, id_col, config).withColumnRenamed(id_col, "doc_b")
     cand = (
@@ -1392,6 +1376,81 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 # incremental (cross-snapshot) dedup
 
+#: ``__src`` tags of the verdict join's reference rows: the standing corpus,
+#: documents admitted by earlier ticks, and the batch being verdicted.
+_SRC_CORPUS, _SRC_PRIOR, _SRC_BATCH = 0, 1, 2
+#: ``band_id`` of the md5 band: byte-identical documents share its bucket.
+_MD5_BAND = -1
+
+
+def _signed_docs(
+    docs: DataFrame, text_col: str, id_col: str, config: MinHashConfig, impl: str
+) -> DataFrame:
+    """(id, __src, __h, shingles, n_sh, h0..h{k-1}) for EVERY row of a
+    tagged (id, __src, text) frame, in one signature pass. Unlike
+    ``_docs_with_signatures`` nothing is filtered out — a doc too short to
+    shingle keeps its md5 (empty shingles, NULL minhashes) — and nothing is
+    widened: the frame keeps its own partitioning."""
+    # a NULL text matches nothing: its md5 key is unique to its own id
+    h = F.coalesce(
+        F.md5(F.col(text_col)),
+        F.concat(F.lit("null:"), F.col(id_col).cast("string")),
+    ).alias("__h")
+    if impl == "arrow":
+        sig_call = _expr_memo(
+            ("doc_sig_call", config, text_col),
+            lambda: _doc_sig_udf(config)(F.col(text_col)).alias("__ds"),
+        )
+        # get() is NULL past the end of a short doc's empty signature
+        extract = _expr_memo(
+            ("sig_get", config.num_hashes),
+            lambda: tuple(
+                F.get("__ds.sig", i).alias(f"h{i}") for i in range(config.num_hashes)
+            ),
+        )
+        return docs.select(id_col, "__src", h, sig_call).select(
+            id_col,
+            "__src",
+            "__h",
+            F.col("__ds.shingles").alias("shingles"),
+            F.size("__ds.shingles").alias("n_sh"),
+            *extract,
+        )
+    words = F.split(F.col(text_col), " ")
+    shingles = F.when(
+        F.size(words) >= config.ngram, shingle_array(F.col(text_col), config.ngram)
+    ).otherwise(F.array().cast("array<string>"))
+    return _with_signature_columns(
+        docs.select(id_col, "__src", h, shingles.alias("shingles")), config
+    ).withColumn("n_sh", F.size("shingles"))
+
+
+def _reference_rows(
+    md5_docs: DataFrame, sig_docs: DataFrame, id_col: str, config: MinHashConfig
+) -> DataFrame:
+    """(ref_id, __src, band_id, band_key, shingles): one md5-band row per
+    ``md5_docs`` (id, __src, __h) row, plus one row per LSH band for every
+    ``sig_docs`` doc that shingles, carrying the shingles its Jaccard
+    verification needs (md5 rows carry NULL: they need no verification)."""
+    exact = md5_docs.select(
+        F.col(id_col).alias("ref_id"),
+        "__src",
+        F.lit(_MD5_BAND).alias("band_id"),
+        F.col("__h").alias("band_key"),
+        F.lit(None).cast("array<string>").alias("shingles"),
+    )
+    near = (
+        sig_docs.where(F.col("n_sh") > 0)
+        .select(
+            F.col(id_col).alias("ref_id"),
+            "__src",
+            "shingles",
+            F.explode(_band_struct(config)).alias("__b"),
+        )
+        .select("ref_id", "__src", "__b.band_id", "__b.band_key", "shingles")
+    )
+    return exact.unionByName(near)
+
 
 def incremental_dedup_verdicts(
     corpus: DataFrame,
@@ -1424,85 +1483,21 @@ def incremental_dedup_verdicts(
     id of the winning stage, NULL for ``keep`` — deterministic, so the
     whole decision table is SQL-replayable.
 
-    Scale shape: the corpus NEVER self-joins and never shuffles its text —
-    it pays one md5 scan (32-byte keys) and one signature scan, both of
-    which a production deployment would persist as the standing index; the
-    batch side broadcasts (minhash_lsh_join's corpus-vs-eval asymmetry).
-    Within-batch work is the ordinary banded LSH on the batch alone, with
-    ``max_bucket_size`` as its quadratic-bucket valve (pass None for the
-    cap-free exact mode the capless SQL replays assume).
-
+    This is ``ingest_tick_verdicts`` with nothing admitted before (see
+    there for the plan shape): the corpus never self-joins and never
+    shuffles its text, and ``max_bucket_size`` caps within-batch band
+    buckets only (None is the cap-free mode the SQL replays assume).
     Banding comes from ``config``, or — the measured-recall discipline —
-    from ``target_recall``, which solves the banding for this operator's
-    own ``threshold`` via ``choose_banding`` (``_resolve_config``).
-
-    r13 plan note: the batch and corpus signature tables are computed ONCE
-    each (persisted) and shared by the corpus probe and the within-batch
-    stage — previously each stage re-derived its own signature pipeline,
-    so one verdict table paid three Arrow shingle+minhash passes over the
-    batch and the plan tree blew up combinatorially (guide §5 caching /
-    §2.4 shared exchanges). Results are bit-identical: the signature
-    stage is deterministic and the cache only changes where it is read
-    from."""
-    config = _resolve_config(config, threshold, target_recall)
-    bh = batch.select(F.col(id_col), F.md5(F.col(text_col)).alias("__h"))
-    ch = corpus.groupBy(F.md5(F.col(text_col)).alias("__h")).agg(
-        F.min(id_col).alias("exact_corpus")
-    )
-    exact = bh.join(ch, "__h", "left")
-    # exact within batch: the smallest STRICTLY-earlier id sharing the hash
-    w = (
-        Window.partitionBy("__h")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    exact = exact.withColumn("exact_batch", F.min(id_col).over(w)).select(
-        id_col, "exact_corpus", "exact_batch"
-    )
-    bdocs = managed_persist(
-        _docs_with_signatures(batch, text_col, id_col, config, impl)
-    )
-    cdocs = managed_persist(
-        _docs_with_signatures(corpus, text_col, id_col, config, impl)
-    )
-    near_c = (
-        _lsh_join_from_docs(cdocs, bdocs, id_col, config, threshold)
-        .groupBy(F.col("doc_b").alias(id_col))
-        .agg(F.min("doc_a").alias("near_corpus"))
-    )
-    near_b = (
-        _pair_jaccard(
-            _lsh_candidate_pairs(bdocs, id_col, config, max_bucket_size),
-            bdocs,
-            id_col,
-            threshold,
-        )
-        .groupBy(F.col("doc_b").alias(id_col))
-        .agg(F.min("doc_a").alias("near_batch"))
-    )
-    verdict = (
-        F.when(F.col("exact_corpus").isNotNull(), F.lit("exact_corpus"))
-        .when(F.col("exact_batch").isNotNull(), F.lit("exact_batch"))
-        .when(F.col("near_corpus").isNotNull(), F.lit("near_corpus"))
-        .when(F.col("near_batch").isNotNull(), F.lit("near_batch"))
-        .otherwise(F.lit("keep"))
-    )
-    return (
-        exact.join(near_c, id_col, "left")
-        .join(near_b, id_col, "left")
-        .select(
-            id_col,
-            verdict.alias("verdict"),
-            F.coalesce(
-                "exact_corpus", "exact_batch", "near_corpus", "near_batch"
-            ).alias("match_id"),
-        )
+    from ``target_recall`` via ``choose_banding`` (``_resolve_config``)."""
+    return ingest_tick_verdicts(
+        corpus, None, batch, text_col, id_col, config, threshold, impl,
+        max_bucket_size, target_recall,
     )
 
 
 def ingest_tick_verdicts(
     corpus: DataFrame,
-    prior_batch: DataFrame,
+    prior_batch: DataFrame | None,
     batch: DataFrame,
     text_col: str,
     id_col: str,
@@ -1517,10 +1512,11 @@ def ingest_tick_verdicts(
     """One STREAMING tick of ``incremental_dedup_verdicts``: verdict each
     ``batch`` document against (a) the immutable standing ``corpus``,
     (b) ``prior_batch`` — every batch document ADMITTED by earlier ticks
-    (the growing ingest index) — and (c) lower-id documents within this
-    tick. Verdicts and precedence are exactly the batch operator's
-    (exact_corpus > exact_batch > near_corpus > near_batch > keep), with
-    "batch" covering both the prior index and the within-tick matches.
+    (the growing ingest index; None or empty on the first tick) — and
+    (c) lower-id documents within this tick. Verdicts and precedence are
+    exactly the batch operator's (exact_corpus > exact_batch > near_corpus
+    > near_batch > keep), with "batch" covering both the prior index and
+    the within-tick matches.
 
     Replay equivalence (proven in tests/test_stream_ingest.py): when
     micro-batches arrive in ascending-id order, "previously admitted or
@@ -1529,101 +1525,95 @@ def ingest_tick_verdicts(
     ``incremental_dedup_verdicts`` decision table — the IVM-style
     correctness statement for ingest dedup.
 
-    Scale shape per tick: the corpus pays one md5 scan + one signature
-    scan (persistable as the standing index) and never self-joins; the
-    prior index pays the same, growing with ADMITTED volume only; the
-    tick's band keys broadcast against both (minhash_lsh_join asymmetry);
-    within-tick work is banded LSH on the tick alone.
+    Plan shape: ONE tagged band join, in place of six probes (exact and
+    near, each against corpus, prior and tick) with their own broadcasts
+    and jobs. Each reference doc is tagged with its source (0 = corpus,
+    1 = prior, 2 = this tick) and exploded into band rows: its LSH bands
+    plus its md5 as one more band (``band_id = -1``; a doc too short to
+    shingle has only that one). The tick's band rows broadcast, the
+    reference rows of all sources join them once (keeping source 0/1 rows
+    and lower-id source-2 rows), Jaccard is verified on the LSH rows of
+    that join only, and one ``groupBy`` of conditional minima yields all
+    four verdict columns. Prior and tick docs are signed in ONE Arrow
+    crossing, persisted once and never widened (a tick is a few hundred
+    docs; see ``parallelize_small`` for what an extra Python task costs).
+    The corpus never self-joins and never shuffles.
 
-    ``max_bucket_size`` caps within-tick band buckets and DEFAULTS TO THE
-    BATCH OPERATOR'S 512 (ADVICE r12 #1: the tick previously ran uncapped
-    while ``incremental_dedup_verdicts`` — whose union-equality the
-    replay-equivalence tests assert — capped at 512, so a >512-doc band
-    bucket would make the tick union find pairs the batch operator
-    drops). Exact tick-union == batch replay equivalence additionally
-    requires NO band bucket to overflow the cap at either granularity
-    (a bucket may exceed the cap in the full batch while each tick's
-    slice of it stays under) — the no-hot-bucket precondition; pass
+    ``max_bucket_size`` (default 512, as in the batch operator) caps
+    within-tick band buckets, counting tick rows only: an oversized
+    bucket loses its within-tick pairs but still matches corpus and prior
+    docs, which are never capped. Exact tick-union == batch replay
+    equivalence additionally requires NO band bucket to overflow the cap
+    at either granularity — the no-hot-bucket precondition; pass
     ``max_bucket_size=None`` to both operators for cap-free parity.
-    ``config``/``target_recall`` resolve as in the batch operator
-    (``_resolve_config``).
+    ``config``/``target_recall`` resolve as in the batch operator.
 
-    ``corpus_hashes`` / ``corpus_sig_docs`` are the STANDING-INDEX hooks
-    (r13): a long-running ingest loop verdicts every tick against the same
-    immutable corpus, so the sink precomputes the corpus md5 table
+    ``corpus_hashes`` / ``corpus_sig_docs`` are the STANDING-INDEX hooks:
+    the sink computes the corpus md5 table
     (``corpus.groupBy(md5(text)).agg(min(id))`` aliased ``exact_corpus``)
     and signature table (``_docs_with_signatures``) once, persists them,
-    and passes them here — each tick then pays ZERO corpus passes instead
-    of two. Omitted, both derive from ``corpus`` as before. The batch and
-    prior signature tables are likewise computed once per call and shared
-    across the probe and within-tick stages (the
-    ``incremental_dedup_verdicts`` r13 plan note)."""
+    and every tick reuses them. Omitted, both derive from ``corpus``."""
     config = _resolve_config(config, threshold, target_recall)
-    bh = batch.select(F.col(id_col), F.md5(F.col(text_col)).alias("__h"))
-    ch = (
-        corpus_hashes
-        if corpus_hashes is not None
-        else corpus.groupBy(F.md5(F.col(text_col)).alias("__h")).agg(
-            F.min(id_col).alias("exact_corpus")
+    tagged = batch.select(id_col, text_col, F.lit(_SRC_BATCH).alias("__src"))
+    if prior_batch is not None:
+        tagged = prior_batch.select(
+            id_col, text_col, F.lit(_SRC_PRIOR).alias("__src")
+        ).unionByName(tagged)
+    signed = managed_persist(_signed_docs(tagged, text_col, id_col, config, impl))
+    own = _reference_rows(signed, signed, id_col, config)
+
+    if corpus_hashes is not None:
+        c_md5 = corpus_hashes.select(F.col("exact_corpus").alias(id_col), "__h")
+    else:
+        c_md5 = corpus.select(id_col, F.md5(F.col(text_col)).alias("__h"))
+    if corpus_sig_docs is None:
+        corpus_sig_docs = _docs_with_signatures(corpus, text_col, id_col, config, impl)
+    src0 = F.lit(_SRC_CORPUS).alias("__src")
+    ref = _reference_rows(
+        c_md5.select("*", src0), corpus_sig_docs.select("*", src0), id_col, config
+    ).unionByName(own)
+
+    src, ref_id, probe_id = F.col("__src"), F.col("ref_id"), F.col("probe_id")
+    md5_band = F.col("band_id") == _MD5_BAND
+    probe = own.where(src == _SRC_BATCH).select(
+        ref_id.alias("probe_id"),
+        "band_id",
+        "band_key",
+        F.col("shingles").alias("probe_sh"),
+    )
+    within = ref_id < probe_id
+    if max_bucket_size is not None:
+        # a probe row's bucket size IS its bucket's tick-row count, so the
+        # cap drops exactly the within-tick pairs of an oversized bucket
+        probe = probe.withColumn(
+            "__bs",
+            F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_key")),
         )
+        within = within & (md5_band | (F.col("__bs") <= max_bucket_size))
+    # the md5 self-match keeps every tick doc in the join's output, so the
+    # one groupBy below yields a row per doc with no outer join
+    pairs = ref.join(F.broadcast(probe), ["band_id", "band_key"]).where(
+        (src < _SRC_BATCH) | within | (md5_band & (ref_id == probe_id))
     )
-    ph = prior_batch.groupBy(F.md5(F.col(text_col)).alias("__h")).agg(
-        F.min(id_col).alias("__exact_prior")
-    )
-    w = (
-        Window.partitionBy("__h")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    exact = (
-        bh.join(ch, "__h", "left")
-        .join(ph, "__h", "left")
-        .withColumn("__exact_within", F.min(id_col).over(w))
-        .select(
-            id_col,
-            "exact_corpus",
-            # least() skips NULLs: min over whichever sides matched
-            F.least("__exact_prior", "__exact_within").alias("exact_batch"),
-        )
-    )
-    bdocs = managed_persist(
-        _docs_with_signatures(batch, text_col, id_col, config, impl)
-    )
-    cdocs = (
-        corpus_sig_docs
-        if corpus_sig_docs is not None
-        else managed_persist(
-            _docs_with_signatures(corpus, text_col, id_col, config, impl)
-        )
-    )
-    pdocs = managed_persist(
-        _docs_with_signatures(prior_batch, text_col, id_col, config, impl)
-    )
-    near_c = (
-        _lsh_join_from_docs(cdocs, bdocs, id_col, config, threshold)
-        .groupBy(F.col("doc_b").alias(id_col))
-        .agg(F.min("doc_a").alias("near_corpus"))
-    )
-    near_p = (
-        _lsh_join_from_docs(pdocs, bdocs, id_col, config, threshold)
-        .groupBy(F.col("doc_b").alias(id_col))
-        .agg(F.min("doc_a").alias("__near_prior"))
-    )
-    near_w = (
-        _pair_jaccard(
-            _lsh_candidate_pairs(bdocs, id_col, config, max_bucket_size),
-            bdocs,
-            id_col,
-            threshold,
-        )
-        .groupBy(F.col("doc_b").alias(id_col))
-        .agg(F.min("doc_a").alias("__near_within"))
-    )
-    near_b = (
-        near_p.join(near_w, id_col, "full")
-        .select(
-            F.col(id_col),
-            F.least("__near_prior", "__near_within").alias("near_batch"),
+
+    n_common = F.size(F.array_intersect("shingles", "probe_sh"))
+    jaccard = n_common / (F.size("shingles") + F.size("probe_sh") - n_common)
+    # 0 = exact, 1 = verified near, NULL = a candidate below the threshold
+    kind = F.when(md5_band, F.lit(0)).when(jaccard >= threshold, F.lit(1))
+    corpus_side = src == _SRC_CORPUS
+    batch_side = (src == _SRC_PRIOR) | ((src == _SRC_BATCH) & (ref_id < probe_id))
+
+    def first(k: int, side: Column) -> Column:
+        return F.min(F.when((F.col("__kind") == k) & side, ref_id))
+
+    found = (
+        pairs.select("probe_id", "ref_id", "__src", kind.alias("__kind"))
+        .groupBy(probe_id.alias(id_col))
+        .agg(
+            first(0, corpus_side).alias("exact_corpus"),
+            first(0, batch_side).alias("exact_batch"),
+            first(1, corpus_side).alias("near_corpus"),
+            first(1, batch_side).alias("near_batch"),
         )
     )
     verdict = (
@@ -1633,14 +1623,10 @@ def ingest_tick_verdicts(
         .when(F.col("near_batch").isNotNull(), F.lit("near_batch"))
         .otherwise(F.lit("keep"))
     )
-    return (
-        exact.join(near_c, id_col, "left")
-        .join(near_b, id_col, "left")
-        .select(
-            id_col,
-            verdict.alias("verdict"),
-            F.coalesce(
-                "exact_corpus", "exact_batch", "near_corpus", "near_batch"
-            ).alias("match_id"),
-        )
+    return found.select(
+        id_col,
+        verdict.alias("verdict"),
+        F.coalesce(
+            "exact_corpus", "exact_batch", "near_corpus", "near_batch"
+        ).alias("match_id"),
     )

@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from datapipelines_spark.functions.caching import expr_memo
 from datapipelines_spark.functions.hashing import portable_hash_seeded
 
 #: Vendored slice of the Public Suffix List (publicsuffix.org, MPL-2.0;
@@ -373,9 +374,30 @@ def registrable_domain(
     last2 = F.concat_ws(".", F.element_at(labels, -2), F.element_at(labels, -1))
     return (
         F.when(n <= 1, host)
-        .when((n >= 3) & last2.isin(*suffixes), last3)
+        .when((n >= 3) & _isin_suffixes(last2, suffixes), last3)
         .otherwise(last2)
     )
+
+
+def _isin_suffixes(value: Column, suffixes: tuple[str, ...]) -> Column:
+    """``value.isin(*suffixes)`` — the same InSet predicate — without one
+    py4j ``lit`` round trip per suffix on every call (~2,100 calls for the
+    705-entry default slice, paid by every streaming tick). The list
+    crosses to the JVM once per session as ONE comma-joined string, split
+    there and memoized (``expr_memo``); each call then costs one py4j
+    call. Joining is only safe for LDH rules, which cannot contain the
+    separator, so every suffix is checked against ``_RULE_RE`` first."""
+    from pyspark import SparkContext
+
+    def build():
+        bad = [s for s in suffixes if not _RULE_RE.fullmatch(s)]
+        if bad:
+            raise ValueError(f"public suffixes outside [a-z0-9.-]: {bad[:5]}")
+        jvm = SparkContext._active_spark_context._jvm
+        parts = jvm.java.util.regex.Pattern.compile(",").split(",".join(suffixes))
+        return jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(parts)
+
+    return Column(value._jc.isin(expr_memo(("public_suffix_seq", suffixes), build)))
 
 
 # ---------------------------------------------------------------------------

@@ -42,10 +42,19 @@ State layout under ``state_dir``::
     deltas/e=E/verdicts/ the tick's verdict rows
     deltas/compact-E/index/  a folded index base (compact_ingest_index)
 
-Scale notes: per tick the standing corpus pays one md5 + one signature
-scan and never self-joins (persist those as a real index at 100 TB); the
-standing index is READ across its committed deltas (planning is
-O(#deltas)) and ``compact_ingest_index`` folds them into one base —
+Scale notes: the standing corpus's md5 and signature tables are built
+once per sink and persisted; a tick never recomputes them and never
+shuffles or self-joins them. Per tick, the previously admitted docs and
+the tick's docs are signed together in ONE Arrow crossing (persisted
+once, not widened), and ONE tagged band join verdicts the tick against
+corpus, prior admissions and itself: the tick's band rows (md5 as one
+more band) broadcast, every source's band rows probe them in a single
+pass, and one groupBy yields the verdicts
+(``operators/dedup.py:ingest_tick_verdicts``). Per-tick cost therefore
+grows with ADMITTED volume plus one scan of the standing tables, and the
+fixed cost of each Spark job and Python task dominates at micro-batch
+sizes. The standing index is READ across its committed deltas (planning
+is O(#deltas)) and ``compact_ingest_index`` folds them into one base —
 exactly the compaction story of sinks/upsert.py, with the manifest as
 the object-store-shaped commit its docstring promised."""
 
@@ -418,12 +427,11 @@ def ingest_dedup_sink(
             )
         else:
             ranked = ranked.withColumn("__n_before", F.lit(0))
-        # localCheckpoint: the admitted set feeds the index write AND
-        # five scans inside the verdict lineage (md5, signatures, bands,
-        # within-tick pairs, the final join) — materialize the gate +
-        # window subplan once per tick instead of 5-6 times (batch-sized,
-        # lineage-truncating; correctness never depended on the re-execs,
-        # the (hash, id) rank is deterministic)
+        # localCheckpoint: the admitted set feeds the index write, the
+        # verdicts' signature crossing and their final join — materialize
+        # the gate + window subplan once per tick instead of per consumer
+        # (batch-sized, lineage-truncating; correctness never depended on
+        # the re-execs, the (hash, id) rank is deterministic)
         admitted = (
             ranked.withColumn(
                 "quota_rank",
@@ -435,15 +443,10 @@ def ingest_dedup_sink(
         )
 
         # 3. dedup verdicts vs corpus + prior admissions + within tick
-        prior_docs = (
-            prior.select(id_col, text_col)
-            if prior is not None
-            else admitted.select(id_col, text_col).limit(0)
-        )
         c_hashes, c_docs = _corpus_artifacts(id_col, text_col)
         v = ingest_tick_verdicts(
             corpus,
-            prior_docs,
+            prior.select(id_col, text_col) if prior is not None else None,
             admitted.select(id_col, text_col),
             text_col,
             id_col,

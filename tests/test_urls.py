@@ -215,3 +215,21 @@ def test_idn_normalization_fast_path_stays_jvm_side(spark):
     plan = out._jdf.queryExecution().analyzed().toString()
     assert "CASE WHEN" in plan and "_idn" in plan
     assert out.collect()[0]["host"] == "a.example.com"
+
+
+def test_registrable_domain_custom_suffixes_and_non_ldh_rejected(spark):
+    """Each suffix set crosses to the JVM as its own memoized list: a
+    custom set applies its rule next to the default one, and a suffix
+    outside the LDH charset (it could carry the list separator) is
+    refused before anything is sent."""
+    import pytest
+
+    df = spark.createDataFrame([("a.b.co.uk",), ("a.b.ex.am",)], "host string")
+    custom = registrable_domain(F.col("host"), suffixes=("ex.am",))
+    default = registrable_domain(F.col("host"))
+    got = sorted(
+        tuple(r) for r in df.select(custom.alias("c"), default.alias("d")).collect()
+    )
+    assert got == [("b.ex.am", "ex.am"), ("co.uk", "b.co.uk")]
+    with pytest.raises(ValueError):
+        registrable_domain(F.col("host"), suffixes=("co.uk", "x,y.uk"))
