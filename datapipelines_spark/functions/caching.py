@@ -1,145 +1,142 @@
-"""Bounded persist registry — cache hygiene for query builders.
+"""Cache lifetimes for query builders: session memos and persist scopes.
 
-Several builders persist an intermediate that their *returned* (still lazy)
-DataFrame depends on — e.g. the shingle table a near-dup join reuses three
-times (operators/dedup.py), or q21's fact-side pair table. An in-builder
-``try/finally: unpersist()`` would release the cache before the caller ever
-executes the plan, defeating the persist; but never releasing it means every
-builder invocation leaks a cached table for the life of the session. In a
-long session (the driver runs 50 queries; bench runs every builder several
-times) dozens of orphaned cached tables accumulate and evict each other —
-the round-2 bench regression.
+Two kinds of value are cached while a plan is built, and each has one
+lifetime and one owner.
 
-``managed_persist`` keeps the persist semantics while bounding the leak:
-each persisted intermediate is registered, and once more than ``_MAX_LIVE``
-are alive the oldest is unpersisted (its consumer has long since executed —
-callers materialize the returned DataFrame before building the next query;
-if one ever hasn't, unpersist merely falls back to recompute, never wrong
-results). Harnesses that know a query is finished (bench.py between
-measurements) call ``release_persists()`` to drop everything at once.
+*Session lifetime* — ``expr_memo``. Pure plan-build values: Column
+expression trees (minhash banding, Hilbert chains, the public-suffix
+list) and resolved fixture tables (``sources/parquet.py:load_table``).
+Each is a pure function of its key, so reusing it can never change a
+result; it only saves py4j round trips (thousands per ingest-tick
+build). Entries are keyed by the SparkContext's ``applicationId``, so a
+restarted session never sees another application's entries; the memo is
+cleared wholesale past 1024 entries (entries of dead
+sessions are never hit again). Nobody releases it.
 
-At 100 TB the same discipline matters more, not less: executor storage
-memory evicting shuffle/operator memory is a throughput cliff, so cached
-intermediates must die with the query that needed them.
+*Scope lifetime* — ``managed_persist`` and ``probe_memo``. Values that
+depend on the data:
+
+- persists: a builder often persists an intermediate that its returned,
+  still lazy DataFrame reads (the shingle table a near-dup join reuses,
+  q21's pair table). It cannot unpersist before returning, so the
+  persist is registered with the current scope instead;
+- sizing probes: ``plan_width``'s partition count and
+  ``similarity._bounded_count``. They are memoized by plan fingerprint,
+  which is only sound while the inputs do not change.
+
+Releasing a scope unpersists its persists and forgets its probes. The
+default scope is the session's, released by ``release_persists()`` at a
+query boundary: ``bench.py``, the benchmark and the tests call it
+between queries. ``persist_scope()`` opens a nested scope for one unit
+of work, such as a streaming ingest tick (``streaming/ingest.py``),
+and releases it on exit. The current scope is a ``ContextVar``, so a
+foreachBatch callback thread that opens a scope never releases another
+thread's persists; a new thread starts in the session scope.
+
+A persist of a plan that is already cached (Spark matches cached plans
+by equivalence) is not registered again: the scope that cached it first
+owns it, and a nested scope cannot release its parent's table.
+Unpersisting early only ever costs recompute, never a wrong result.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
-
-#: Registry mutations keep _LIVE and _KEYS as PAIRED lists; builders may
-#: register persists from concurrent driver threads (queries/recall.py
-#: builds its independent family arms from a thread pool — guide §2.6), so
-#: the check-then-mutate sequences below run under one lock. Misordered
-#: interleaving could only mispair an eviction (a perf bug, never a
-#: correctness one — unpersist falls back to recompute), but cheap to rule
-#: out entirely.
-_REG_LOCK = threading.Lock()
-
-_LIVE: list[DataFrame] = []
-#: Enough headroom that one composed pipeline keeps ALL its intermediates
-#: hot, small enough that a 50-query driver session holds a bounded set of
-#: cached tables, not dozens. r13 raised 6 -> 16: the accuracy harnesses
-#: (queries/recall.py) legitimately register 8-14 persists while building
-#: one plan (7 ANN family arms / 4 LSH arms sharing signature tables), and
-#: at 6 the registry evicted the earliest arms' caches BEFORE the plan ever
-#: executed — the final sim_recall_harness plan scanned parquet 83 times
-#: (plans/r13/sim_recall_harness_before.txt) because the shared
-#: e/ranked/signature subtrees it was built around were no longer cached.
-#: The eviction-on-overflow discipline itself is unchanged: whatever a
-#: harness forgets to release still dies after 16 newer persists.
-_MAX_LIVE = 16
+from pyspark.storagelevel import StorageLevel
 
 
-def _unpersist_quietly(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        # Session already stopped / executor gone — nothing left to release.
-        pass
+class _Scope:
+    """The persists and sizing probes of one query, tick or session."""
+
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.persists: list[DataFrame] = []
+        self.probes: dict[tuple, object] = {}
+
+    def release(self) -> None:
+        with self.lock:
+            drop, self.persists = self.persists, []
+            self.probes.clear()
+        for df in drop:
+            try:
+                df.unpersist()
+            except Exception:
+                # Session already stopped / executor gone — nothing to release.
+                pass
 
 
-#: (applicationId, canonicalized-plan sha256) already registered, parallel
-#: to _LIVE. Spark's CacheManager dedupes STORAGE by plan equivalence, but
-#: the registry previously appended a fresh entry per call — so a bench
-#: repeat loop (or a harness that rebuilds the same subplan per arm)
-#: re-registered the same cache entry over and over, blew through
-#: _MAX_LIVE, and the "oldest" eviction unpersisted the very cache every
-#: live consumer shared (r13: sim_ivf_sq8_topk registers 3 persists per
-#: build x 5 bench repeats = 15 registrations of 3 caches). Deduping by
-#: plan fingerprint makes registration idempotent: a re-persist of an
-#: already-registered plan just refreshes its LRU position.
-_KEYS: list[tuple[str, str] | None] = []
+_SESSION = _Scope()
+_CURRENT: ContextVar[_Scope] = ContextVar("persist_scope", default=_SESSION)
 
 
 def managed_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` with idempotent registration in the bounded live
-    set: one registry slot per distinct (session, canonicalized plan)."""
+    """``df.persist()``, released with the current scope."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df.persist()  # already cached: its first persister owns it
     persisted = df.persist()
-    key: tuple[str, str] | None
-    try:
-        from datapipelines_spark.functions.partitioning import plan_fingerprint
-
-        key = (
-            persisted.sparkSession.sparkContext.applicationId,
-            plan_fingerprint(persisted),
-        )
-    except Exception:
-        key = None  # unfingerprintable plan: fall back to append-always
-    with _REG_LOCK:
-        if key is not None and key in _KEYS:
-            i = _KEYS.index(key)
-            _KEYS.append(_KEYS.pop(i))
-            _LIVE.append(_LIVE.pop(i))
-            return persisted
-        _LIVE.append(persisted)
-        _KEYS.append(key)
-        evict = []
-        while len(_LIVE) > _MAX_LIVE:
-            _KEYS.pop(0)
-            evict.append(_LIVE.pop(0))
-    for df_old in evict:
-        _unpersist_quietly(df_old)
+    scope = _CURRENT.get()
+    with scope.lock:
+        scope.persists.append(persisted)
     return persisted
 
 
 def release_persists() -> None:
-    """Unpersist every registered intermediate (bench/driver hygiene hook)."""
-    with _REG_LOCK:
-        drop, _LIVE[:], _KEYS[:] = list(_LIVE), [], []
-    for df_old in drop:
-        _unpersist_quietly(df_old)
+    """Release the session scope: unpersist its intermediates and forget
+    its sizing probes (query-boundary hook)."""
+    _SESSION.release()
 
 
-#: (applicationId, site key) -> Column (or tuple of Columns). PLAN-BUILD
-#: memo (r14, guide §1.2 applied to the driver): every ``F.*`` call is a
-#: py4j round trip, and the engine's deep expression trees — minhash
-#: banding/signatures (~8000 calls per ingest-tick build), the Hilbert
-#: FST chains, the LSH hyperplane sums — re-spend 0.5-2 s of pure driver
-#: time per plan build on IDENTICAL expressions. Columns are unresolved,
-#: name-based, immutable expression objects — reusable across DataFrames
-#: and plans within one JVM; keying on the applicationId (the
-#: ``_COUNT_CACHE`` discipline) means a fresh context never sees another
-#: application's entries. Memoized trees must reference columns by FIXED
-#: names only — data-dependent literals (quantization bounds, counts)
-#: stay OUT of the memoized fragment and ride separate placeholder
-#: columns at the call site.
-_EXPR_CACHE: dict[tuple, object] = {}
+@contextmanager
+def persist_scope() -> Iterator[_Scope]:
+    """Persists and probes made inside the block are released on exit."""
+    scope = _Scope()
+    token = _CURRENT.set(scope)
+    try:
+        yield scope
+    finally:
+        _CURRENT.reset(token)
+        scope.release()
+
+
+def _app_key(key: tuple) -> tuple | None:
+    sc = SparkContext._active_spark_context
+    return None if sc is None else (sc.applicationId,) + key
+
+
+def probe_memo(key: tuple, probe):
+    """``probe()``, memoized in the current scope under ``key`` — a sizing
+    probe keyed by plan fingerprint, forgotten when the scope is released."""
+    k = _app_key(key)
+    if k is None:
+        return probe()
+    probes = _CURRENT.get().probes
+    value = probes.get(k)
+    if value is None:
+        value = probes[k] = probe()
+    return value
+
+
+#: (applicationId,) + key -> a pure plan-build value (module docstring).
+#: Memoized trees must reference columns by FIXED names only —
+#: data-dependent literals (quantization bounds, counts) stay OUT of the
+#: memoized fragment and ride separate placeholder columns at the call site.
+_MEMO: dict[tuple, object] = {}
 
 
 def expr_memo(key: tuple, build):
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
+    """``build()``, memoized for the life of the session under ``key``."""
+    k = _app_key(key)
+    if k is None:
         return build()
-    k = (sc.applicationId,) + key
-    expr = _EXPR_CACHE.get(k)
-    if expr is None:
-        if len(_EXPR_CACHE) > 1024:
-            _EXPR_CACHE.clear()
-        expr = build()
-        _EXPR_CACHE[k] = expr
-    return expr
+    value = _MEMO.get(k)
+    if value is None:
+        if len(_MEMO) > 1024:
+            _MEMO.clear()
+        value = _MEMO[k] = build()
+    return value

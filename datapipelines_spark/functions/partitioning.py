@@ -42,27 +42,18 @@ def plan_fingerprint(df: DataFrame) -> str:
     ).hexdigest()
 
 
-#: (applicationId, analyzed-plan sha256) -> probed partition width. The width
-#: of a deterministic plan over immutable inputs cannot change within a
-#: session, so repeated builds of the same query (bench repeats, retried
-#: pipelines) skip the physical-planning pass the ``.rdd`` probe forces — the
-#: session-scoped analogue of a catalog's table-statistics cache. Caveat: for
-#: mutable/appended sources the width CAN drift within a session; the cached
-#: value then only mis-sizes the widen-if-narrow check below (perf, never
-#: correctness).
-_WIDTH_CACHE: dict[tuple[str, str], int] = {}
-
-
 def plan_width(df: DataFrame) -> int:
-    """Partition count of ``df``'s physical plan, memoized per session."""
-    key = (df.sparkSession.sparkContext.applicationId, plan_fingerprint(df))
-    width = _WIDTH_CACHE.get(key)
-    if width is None:
-        if len(_WIDTH_CACHE) > 4096:
-            _WIDTH_CACHE.clear()
-        width = df.rdd.getNumPartitions()
-        _WIDTH_CACHE[key] = width
-    return width
+    """Partition count of ``df``'s physical plan. Repeated builds of the
+    same plan (bench repeats, retried pipelines) skip the physical-planning
+    pass the ``.rdd`` probe forces: the count is memoized by plan
+    fingerprint in the current cache scope (``functions/caching.py``), and
+    releasing the scope forgets it, so a source that grows between queries
+    is probed again."""
+    from datapipelines_spark.functions.caching import probe_memo
+
+    return probe_memo(
+        ("width", plan_fingerprint(df)), lambda: df.rdd.getNumPartitions()
+    )
 
 
 def parallelize_small(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

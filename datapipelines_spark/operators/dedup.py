@@ -458,7 +458,7 @@ def _band_struct(config: MinHashConfig) -> Column:
         )
 
     # pure function of config over fixed column names — memoized, the
-    # deepest expression tree on the minhash plan-build path (_EXPR_CACHE)
+    # deepest expression tree on the minhash plan-build path (expr_memo)
     return _expr_memo(("band_struct", config.num_hashes, config.bands), build)
 
 

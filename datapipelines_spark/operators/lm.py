@@ -91,6 +91,8 @@ def bigram_lm_score(
     # probe-and-score lifetime — the caches are model-table-sized (bounded
     # by the reference slice, not the corpus) and live for the session,
     # the same accepted pattern as connected_components. ADVICE r6 #4.
+    # The probe's count itself is memoized only until the query boundary
+    # (similarity._bounded_count, functions/caching.py:probe_memo).
     big = big.persist()
     hist = hist.persist()
     probe = BROADCAST_MAX_MODEL_ROWS

@@ -227,7 +227,6 @@ def cosine_topk_auto(
     k: int = 5,
     pair_budget: int = 5_000_000,
     max_query_rows: int = 100_000,
-    cache_probes: bool = True,
 ) -> DataFrame:
     """Route exact top-k by cost: when queries × corpus fits ``pair_budget``,
     use the broadcast-join expression path (``cosine_topk``) — pure Catalyst,
@@ -238,19 +237,16 @@ def cosine_topk_auto(
 
     Both probes early-stop via ``limit(n+1).count()``: on a billion-row
     corpus the router reads a bounded prefix, never a full scan. Probe
-    results are memoized per (session, analyzed plan) so repeated builds pay
-    the probe jobs once. Caveat: the memo assumes the PLAN determines the
-    count — true for immutable fixture inputs, false for mutable/appended
-    sources (a table that grows between builds can keep routing through the
-    broadcast path). Pass ``cache_probes=False`` for mutable sources; a
-    stale probe only mis-ROUTES (both paths return identical results, tie
-    order included — tested)."""
+    results are memoized by plan in the current cache scope, so repeated
+    builds within one query pay the probe jobs once; releasing the scope
+    (``release_persists()`` between queries) forgets them, so a source that
+    grows between queries is counted again. A stale probe could only
+    mis-ROUTE: both paths return identical results, tie order included
+    (tested)."""
     probe = pair_budget // max(k, 1)
-    n_corpus = _bounded_count(df.select(id_col), probe + 1, cache_probes)
+    n_corpus = _bounded_count(df.select(id_col), probe + 1)
     if n_corpus <= probe:
-        n_queries = _bounded_count(
-            df.where(query_pred).select(id_col), probe + 1, cache_probes
-        )
+        n_queries = _bounded_count(df.where(query_pred).select(id_col), probe + 1)
         if n_queries * n_corpus <= pair_budget:
             return cosine_topk(df, vec_col, id_col, query_pred, k)
     return cosine_topk_vectorized(
@@ -258,30 +254,15 @@ def cosine_topk_auto(
     )
 
 
-#: (applicationId, analyzed-plan sha256, limit) -> bounded count; see
-#: functions/partitioning.plan_width for the rationale. Keyed on the full
-#: analyzed plan string, not DataFrame.semanticHash() — that is a 32-bit
-#: hash, so distinct plans can collide and return each other's counts.
-_COUNT_CACHE: dict[tuple[str, str, int], int] = {}
-
-
-def _bounded_count(df: DataFrame, limit: int, cache: bool = True) -> int:
+def _bounded_count(df: DataFrame, limit: int) -> int:
+    """``df.limit(limit).count()``, memoized by plan fingerprint in the
+    current cache scope (``functions/caching.py:probe_memo``)."""
+    from datapipelines_spark.functions.caching import probe_memo
     from datapipelines_spark.functions.partitioning import plan_fingerprint
 
-    if not cache:
-        return df.limit(limit).count()
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(df),
-        limit,
+    return probe_memo(
+        ("count", plan_fingerprint(df), limit), lambda: df.limit(limit).count()
     )
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        if len(_COUNT_CACHE) > 4096:
-            _COUNT_CACHE.clear()
-        n = df.limit(limit).count()
-        _COUNT_CACHE[key] = n
-    return n
 
 
 def cosine_topk_chunked(

@@ -189,14 +189,11 @@ def sq8_adc_rerank_topk(
     if shortlist < top_k:
         raise ValueError("shortlist must be >= top_k")
     # memoized bounded count (similarity._bounded_count): the guard probe
-    # is one early-stopping job per distinct corpus plan per session, not
-    # one per call — bench repeats and composed pipelines skip it (r13).
-    # ASSUMPTION (r14, ADVICE): the memo key is (appId, plan fingerprint),
-    # so a source that GROWS in-place within one session under an identical
-    # plan (parquet dir appended between calls) would reuse a stale count
-    # and could slip past this cap. Sources here are immutable snapshots
-    # (the bench fixtures and any sane table layout); pass cache=False to
-    # _bounded_count if that ever changes.
+    # is one early-stopping job per distinct corpus plan per query, not one
+    # per call — bench repeats and composed pipelines skip it (r13). The
+    # memo lives in the current cache scope and is forgotten at the query
+    # boundary (release_persists), so a source appended between queries
+    # is counted again and cannot slip past this cap.
     from datapipelines_spark.operators.similarity import _bounded_count
 
     n_corpus = _bounded_count(corpus_df.select(F.lit(1)), max_corpus + 1)

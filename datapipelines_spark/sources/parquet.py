@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datapipelines_spark.functions.caching import expr_memo
+
 TABLES = (
     "region",
     "nation",
@@ -31,16 +33,6 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
-#: (applicationId, abs sf_dir, table) -> resolved DataFrame. ``spark.read
-#: .parquet`` re-lists the path and re-reads footers for schema inference on
-#: EVERY call — ~30-60 ms of driver-side fixed cost per table per query
-#: build, which dominated sub-second bench queries (r4 perf flags). A real
-#: deployment resolves a table once per session through a metastore catalog;
-#: this memo is that, scoped per live session so a restarted session (new
-#: applicationId) re-resolves. Fixture dirs are immutable, so no staleness.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. ``sf_dir`` like ``/root/testdata/sf0.01``.
 
@@ -50,16 +42,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP_NS to its microsecond TIMESTAMP, so both engines see identical
     values. The conf is set at runtime so this works under any caller-provided
     SparkSession (e.g. the driver's).
+
+    ``spark.read.parquet`` re-lists the path and re-reads footers for schema
+    inference on every call — ~30-60 ms of driver-side fixed cost per table
+    per query build. A real deployment resolves a table once per session
+    through a metastore catalog; here the resolved DataFrame lives in the
+    session memo (``functions/caching.py:expr_memo``), so a restarted
+    session re-resolves. Fixture dirs are immutable, so no staleness.
     """
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    if len(_TABLE_CACHE) > 512:  # dead-session entries; keys never rehit
-        _TABLE_CACHE.clear()
-    df = _read_table(spark, sf_dir, name)
-    _TABLE_CACHE[key] = df
-    return df
+    return expr_memo(
+        ("table", os.path.abspath(sf_dir), name),
+        lambda: _read_table(spark, sf_dir, name),
+    )
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

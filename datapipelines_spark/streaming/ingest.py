@@ -46,10 +46,10 @@ Scale notes: the standing corpus's md5 and signature tables are built
 once per sink and persisted; a tick never recomputes them and never
 shuffles or self-joins them. Per tick, the previously admitted docs and
 the tick's docs are signed together in ONE Arrow crossing (persisted
-once, not widened), and ONE tagged band join verdicts the tick against
-corpus, prior admissions and itself: the tick's band rows (md5 as one
-more band) broadcast, every source's band rows probe them in a single
-pass, and one groupBy yields the verdicts
+for the tick's own scope, not widened), and ONE tagged band join
+verdicts the tick against corpus, prior admissions and itself: the
+tick's band rows (md5 as one more band) broadcast, every source's band
+rows probe them in a single pass, and one groupBy yields the verdicts
 (``operators/dedup.py:ingest_tick_verdicts``). Per-tick cost therefore
 grows with ADMITTED volume plus one scan of the standing tables, and the
 fixed cost of each Spark job and Python task dominates at micro-batch
@@ -67,6 +67,7 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from datapipelines_spark.functions.caching import persist_scope
 from datapipelines_spark.functions.hashing import portable_hash_seeded
 from datapipelines_spark.operators.dedup import (
     MinHashConfig,
@@ -362,9 +363,9 @@ def ingest_dedup_sink(
     # dominant per-tick cost), which is exactly the "persist those as a
     # real index at 100 TB" note in the module docstring, now done.
     # Plain .persist(), not managed_persist: these must outlive every
-    # tick's own bounded persists; they die with the streaming query's
-    # session (or an explicit clearCache), the same lifetime a production
-    # deployment gives its standing index.
+    # tick's persist scope; they die with release_standing (or the
+    # session), the same lifetime a production deployment gives its
+    # standing index.
     _standing: dict[str, DataFrame] = {}
 
     def _corpus_artifacts(id_col_: str, text_col_: str):
@@ -383,6 +384,10 @@ def ingest_dedup_sink(
             ).persist()
         return _standing["hashes"], _standing["docs"]
 
+    # One persist scope per tick (a fresh scope on every call): the tick's
+    # signed table and sizing probes are released once its writes finish,
+    # on the foreachBatch thread, without touching other threads' persists.
+    @persist_scope()
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         epoch = int(epoch_id)

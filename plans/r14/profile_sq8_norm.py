@@ -45,11 +45,8 @@ for rep in range(6):
     for q in QUERIES:
         for arm, impl in arms.items():
             sq._normalized_vec = impl
-            release_persists()
+            release_persists()  # also forgets the memoized count probes
             spark.catalog.clearCache()
-            import datapipelines_spark.operators.similarity as sim
-
-            sim._COUNT_CACHE.clear()
             t0 = time.perf_counter()
             rows = registry[q].builder(spark, sf_dir).collect()
             walls[(q, arm)].append(round(time.perf_counter() - t0, 3))

@@ -28,6 +28,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _release_cache_scope():
+    """Release the session cache scope after every test module: the
+    suite's bound on cached tables and memoized probes."""
+    yield
+    from datapipelines_spark.functions.caching import release_persists
+
+    release_persists()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 from datapipelines_spark.operators.asof import asof_join, asof_join_via_range
 
 _BASE = dt.datetime(2024, 1, 1)
-_KEYS = ["a", "b", "c"]
+_KEY_POOL = ["a", "b", "c"]
 
 
 def _ts(minutes: int) -> dt.datetime:
@@ -23,13 +23,13 @@ def _ts(minutes: int) -> dt.datetime:
 # value is whichever equal-time right row sorts last — deliberately
 # unspecified, so the fuzz pins only the specified contract
 rights = st.dictionaries(
-    st.tuples(st.sampled_from(_KEYS), st.integers(0, 50)),
+    st.tuples(st.sampled_from(_KEY_POOL), st.integers(0, 50)),
     st.integers(-100, 100),
     min_size=0,
     max_size=12,
 )
 lefts = st.lists(
-    st.tuples(st.sampled_from(_KEYS), st.integers(0, 50)),
+    st.tuples(st.sampled_from(_KEY_POOL), st.integers(0, 50)),
     min_size=1,
     max_size=15,
 )

@@ -6,6 +6,7 @@ wall time."""
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.storagelevel import StorageLevel
 
 from datapipelines_spark.operators.dedup import MinHashConfig, ingest_tick_verdicts
 from datapipelines_spark.queries.dedup import _MINHASH, staged_dup_docs
@@ -95,7 +96,8 @@ def test_one_tick_plan_shape(spark, sf_dir, tmp_path, monkeypatch):
     """One streaming tick (the second, so the prior index is non-empty)
     makes exactly one managed_persist call — the signature table of prior
     and tick docs — whose Arrow crossing sits on no round-robin exchange,
-    and runs at most ``_TICK_JOBS`` Spark jobs."""
+    which is released when the tick returns, and runs at most
+    ``_TICK_JOBS`` Spark jobs."""
     import datapipelines_spark.functions.caching as caching
     import datapipelines_spark.operators.dedup as dedup
 
@@ -116,12 +118,13 @@ def test_one_tick_plan_shape(spark, sf_dir, tmp_path, monkeypatch):
     )
     sink(b0, 0)
 
-    plans = []
+    plans, persisted = [], []
     real = caching.managed_persist
 
     def spy(df):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real(df)
+        persisted.append(real(df))
+        return persisted[-1]
 
     monkeypatch.setattr(caching, "managed_persist", spy)
     monkeypatch.setattr(dedup, "managed_persist", spy)
@@ -136,6 +139,9 @@ def test_one_tick_plan_shape(spark, sf_dir, tmp_path, monkeypatch):
     jobs = sc.statusTracker().getJobIdsForGroup("one-tick-shape")
 
     assert len(plans) == 1
+    # the tick's persist scope released the signature table when the
+    # tick's writes finished
+    assert persisted[0].storageLevel == StorageLevel.NONE
     sig = plans[0]
     assert "ArrowEvalPython" in sig
     assert "RoundRobinPartitioning" not in sig[sig.index("ArrowEvalPython"):]

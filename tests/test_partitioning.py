@@ -43,14 +43,21 @@ def test_fingerprint_distinguishes_wide_plans_past_tostring_elision(spark):
 
 
 def test_plan_width_memoizes_across_rebuilds(spark):
-    from datapipelines_spark.functions import partitioning as P
+    from datapipelines_spark.functions import caching
 
-    P._WIDTH_CACHE.clear()
+    probes = caching._SESSION.probes
+    caching.release_persists()
     w1 = plan_width(_build(spark))
-    assert len(P._WIDTH_CACHE) == 1
+    assert len(probes) == 1
     w2 = plan_width(_build(spark))  # rebuild: same fingerprint, cache hit
     assert w2 == w1
-    assert len(P._WIDTH_CACHE) == 1
+    assert len(probes) == 1
+    # the query boundary forgets the probe: a source that changed between
+    # queries is probed again (a miss), never served a stale width
+    caching.release_persists()
+    assert len(probes) == 0
+    assert plan_width(_build(spark)) == w1
+    assert len(probes) == 1
 
 
 def test_parallelize_small_is_floor_not_coalesce(spark):

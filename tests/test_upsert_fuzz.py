@@ -16,7 +16,7 @@ from datapipelines_spark.sinks.upsert import (
     vacuum,
 )
 
-_KEYS = list(range(1, 7))
+_KEY_POOL = list(range(1, 7))
 
 # an op is ("upsert", {key: val}), ("delete", [keys]), ("compact", None) or
 # ("vacuum", retain_n); batches are dicts so one key never appears twice
@@ -27,12 +27,12 @@ _ops = st.lists(
         st.tuples(
             st.just("upsert"),
             st.dictionaries(
-                st.sampled_from(_KEYS), st.integers(-50, 50), min_size=1, max_size=4
+                st.sampled_from(_KEY_POOL), st.integers(-50, 50), min_size=1, max_size=4
             ),
         ),
         st.tuples(
             st.just("delete"),
-            st.lists(st.sampled_from(_KEYS), min_size=1, max_size=3, unique=True),
+            st.lists(st.sampled_from(_KEY_POOL), min_size=1, max_size=3, unique=True),
         ),
         st.tuples(st.just("compact"), st.none()),
         st.tuples(st.just("vacuum"), st.integers(1, 3)),
